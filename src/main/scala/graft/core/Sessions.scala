@@ -19,11 +19,19 @@ import org.apache.spark.sql.SparkSession
   *    coalescing) is part of the 100 TB posture.
   *  - shuffle partitions = cores in local mode; on a real cluster this
   *    would be sized to data volume (AQE coalesces down as needed).
+  *  - `file://` bound to `ForkFreeLocalFs` at both Hadoop entry points
+  *    (`FileSystem` and `FileContext`): with no native `libhadoop`, Hadoop
+  *    spawns one `chmod` process per local file or directory it creates
+  *    and one `readlink` per checkpoint log lookup, which set the
+  *    per-trigger latency of a local sink. HDFS and S3 paths are untouched.
+  *    Hadoop caches `FileSystem` instances JVM-wide, so the binding holds
+  *    only if no `file://` instance was made from another conf first.
   */
 object Sessions {
 
   def configure(b: SparkSession.Builder, cpus: Int): SparkSession.Builder =
-    b.config("spark.sql.shuffle.partitions", cpus.toString)
+    ForkFreeLocalFs.hadoopConf.foldLeft(b) { case (b, (k, v)) => b.config(s"spark.hadoop.$k", v) }
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")

@@ -26,6 +26,8 @@ object DriftCheck {
     * per leaf column. */
   def footerSignature(path: String): Seq[String] = {
     val conf = new Configuration()
+    // runs before the session: the FileSystem it caches must be the bound one
+    graft.core.ForkFreeLocalFs.hadoopConf.foreach { case (k, v) => conf.set(k, v) }
     val p = new Path(path)
     val fs = FileSystem.get(p.toUri, conf)
     // Driver testdata is a single file; Spark-written tables are dirs of

@@ -21,12 +21,15 @@ import graft.model.Envelope
   * envelopes go to a quarantine output instead of crashing the batch
   * (the reference NPEs on them).
   *
-  * Scale notes: the whole pipeline is narrow (zero shuffles) — parse,
-  * explode and the scalar derivations pipeline inside one
-  * WholeStageCodegen stage, so ingestion parallelism = source
-  * partitions, exactly like the reference's direct-stream design but
-  * with codegen'd JSON projection instead of per-record Gson DOM
-  * parsing (reference inefficiency, SURVEY.md §4.1.2).
+  * Scale notes: the whole pipeline is narrow (zero shuffles), so
+  * ingestion parallelism = source partitions, exactly like the
+  * reference's direct-stream design. The optimized plan parses each
+  * envelope once (one `from_json`). That parse runs in an interpreted
+  * Project outside the WholeStageCodegen stage, because `JsonToStructs`
+  * is `CodegenFallback`; the explode and the scalar derivations run in
+  * the codegen'd stage above it. One streaming Jackson pass per envelope
+  * replaces the reference's per-record Gson DOM parsing (SURVEY.md
+  * §4.1.2).
   */
 object Ingest {
 
@@ -42,10 +45,14 @@ object Ingest {
   def quarantine(parsed: DataFrame, valueCol: String = "value"): DataFrame =
     parsed.filter(invalid).select(col(valueCol).as("corrupt_record"))
 
-  /** The envelope→DataPoint transform (schema = graft.model.DataPoint). */
+  /** The envelope→DataPoint transform (schema = graft.model.DataPoint).
+    * No `!invalid` filter: a null `env`, `data` or `datastream_id` already
+    * explodes to zero rows, and the optimizer would copy the parse into
+    * such a filter once per field it tests. */
   def dataPoints(parsed: DataFrame): DataFrame =
-    parsed.filter(!invalid)
-      .select(col("env.datastream_id").as("datastream_id"), explode(col("env.data")).as("d"))
+    parsed
+      .select(col("env.datastream_id").as("datastream_id"),
+        explode(when(col("env.datastream_id").isNotNull, col("env.data"))).as("d"))
       .select(
         col("datastream_id"),
         date_format(timestamp_millis(col("d.dateTime")), "yyyyMMdd").as("day"),

@@ -92,5 +92,9 @@ class IngestSpec extends SparkSpec {
     val (points, _) = Ingest(Seq("""{"datastream_id":1,"data":[]}""").toDF("value"))
     val plan = points.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
+    // a column the optimizer cannot fold, unlike a local Seq
+    val raw = spark.range(1).select(col("id").cast("string").as("value"))
+    val optimized = Ingest.dataPoints(Ingest.parse(raw)).queryExecution.optimizedPlan.toString
+    assert("from_json\\(".r.findAllMatchIn(optimized).size == 1, s"not one parse in:\n$optimized")
   }
 }
